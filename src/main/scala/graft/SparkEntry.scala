@@ -1308,8 +1308,8 @@ object SparkEntry {
           expr(s"least((__ns - ${lo}L) * 3 div ${hi - lo + 1}L, 2L)")).drop("__ns")
         val dirP = java.nio.file.Files.createTempDirectory("graft_sdh")
         val qn = "sdh_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        // r17 (guide §2.4/§2.3 — measured with dev.StreamDedupProbe): the
-        // old staging ran THREE serial filter+coalesce(1) write jobs, each
+        // r17 (guide §2.4/§2.3, measured): the old staging ran THREE
+        // serial filter+coalesce(1) write jobs, each
         // a single-threaded full scan of events (~0.9 s/pass warm). One
         // hash-repartition on the tier value + partitionBy writes all
         // three tier files in one job (the scan stays parallel; each tier
@@ -1343,8 +1343,8 @@ object SparkEntry {
             }
           } finally deleteRecursively(w)
           // State width derived from the staged volume (guide §2.2 "fewer,
-          // larger partitions", measured with dev.StreamDedupProbe): a
-          // stateful streaming query pins its state width to
+          // larger partitions", measured): a stateful streaming query
+          // pins its state width to
           // spark.sql.shuffle.partitions at start, and every micro-batch
           // pays a per-partition state-store load + commit (delta file +
           // fsync) REGARDLESS of rows — at the bench's 2 MB staged input,

@@ -81,22 +81,15 @@ final case class MinHashBands(text: Expression, ngram: Expression,
 }
 
 /** cosine_lsh_buckets(vec, bits, dim, tables) → array<string> of
-  * random-hyperplane sign-bucket keys, one per table ("t:code").
-  * `offsets` (internal 5th child, an array<double> literal; empty = off)
-  * carries per-plane centering constants — the sign test becomes
-  * dot(v, w_p) > offsets(p). Not exposed to SQL: centered codes are a
-  * runtime knob, never pinned by an oracle. */
+  * random-hyperplane sign-bucket keys, one per table ("t:code"). */
 final case class CosineLshBuckets(vec: Expression, bits: Expression,
-    dim: Expression, tables: Expression,
-    offsets: Expression = Literal.create(Seq.empty[Double],
-      ArrayType(DoubleType, containsNull = false))) extends Expression
+    dim: Expression, tables: Expression) extends Expression
     with CodegenFallback {
   override def prettyName: String = "cosine_lsh_buckets"
-  override def children: Seq[Expression] = Seq(vec, bits, dim, tables, offsets)
+  override def children: Seq[Expression] = Seq(vec, bits, dim, tables)
   override def checkInputDataTypes(): TypeCheckResult =
     HashExprChecks.check(prettyName,
-      Seq(ArrayType(DoubleType), IntegerType, IntegerType, IntegerType,
-        ArrayType(DoubleType)),
+      Seq(ArrayType(DoubleType), IntegerType, IntegerType, IntegerType),
       children.map(_.dataType))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = children.exists(_.nullable)
@@ -105,21 +98,18 @@ final case class CosineLshBuckets(vec: Expression, bits: Expression,
     val b = bits.eval(input)
     val d = dim.eval(input)
     val tb = tables.eval(input)
-    val off = offsets.eval(input)
-    if (v == null || b == null || d == null || tb == null || off == null) null
+    if (v == null || b == null || d == null || tb == null) null
     else {
       val arr = v.asInstanceOf[ArrayData].toDoubleArray()
       new GenericArrayData(
         kernels.lshBuckets(arr.toSeq, b.asInstanceOf[Int],
-          d.asInstanceOf[Int], tb.asInstanceOf[Int],
-          off.asInstanceOf[ArrayData].toDoubleArray())
+          d.asInstanceOf[Int], tb.asInstanceOf[Int])
           .map(UTF8String.fromString(_): AnyRef))
     }
   }
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(newChildren(0), newChildren(1), newChildren(2), newChildren(3),
-      newChildren(4))
+    copy(newChildren(0), newChildren(1), newChildren(2), newChildren(3))
 }
 
 /** pair_ngram_tf(predWords, refWords, maxN) — GENERATOR: one
@@ -217,16 +207,6 @@ object hashExpressions {
     SparkBridge.toColumn(CosineLshBuckets(
       SparkBridge.toExpression(vec.cast("array<double>")),
       Literal(bits), Literal(dim), Literal(tables)))
-
-  /** Centered variant — `offsets` (tables×bits per-plane constants, or
-    * empty for none) travels as an array literal in the plan. */
-  def lshBuckets(vec: Column, bits: Int, dim: Int, tables: Int,
-      offsets: Array[Double]): Column =
-    SparkBridge.toColumn(CosineLshBuckets(
-      SparkBridge.toExpression(vec.cast("array<double>")),
-      Literal(bits), Literal(dim), Literal(tables),
-      Literal.create(offsets.toSeq,
-        ArrayType(DoubleType, containsNull = false))))
 
   /** Generator column: select alongside other columns to get `n`,
     * `gram`, `tf_p`, `tf_r` output columns (Catalyst plans a Generate

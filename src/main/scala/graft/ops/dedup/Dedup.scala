@@ -314,10 +314,12 @@ final case class MinHashDeduplicateFilter(inputKey: String = "text",
               a
             }
             if (nMin > 0) {
-              // big bucket: stream against the frozen min pool
+              // big bucket: stream against the frozen min pool; equal
+              // keys never pair, as in the small-bucket walk below
               var k = 0; var hit = false
               while (!hit && k < nMin) {
-                if (graft.functions.kernels.jaccardSorted(shs(k), sh) >= th)
+                if (ids(k) != id &&
+                    graft.functions.kernels.jaccardSorted(shs(k), sh) >= th)
                   hit = true
                 k += 1
               }
@@ -676,10 +678,10 @@ final case class SemDeduplicateFilter(embKey: String = "embedding",
     // auto keeps buckets at the density the cap assumes. Floor 8 makes
     // small corpora identical to the old fixed default.
     // oneJobCount: v is an exchange-free projection, so the auto-bits
-    // gate costs ONE job, not count()'s 2 AQE jobs (r13 sideCounts rule)
+    // gate costs ONE job, not count()'s 2 AQE jobs
     val b = if (bits == 0 && mode == "lsh")
       graft.ops.sim.Similarity.autoBits(
-        graft.ops.sim.Similarity.oneJobCount(v)) else bits
+        graft.core.Partitioning.oneJobCount(v)) else bits
     val dups =
       if (mode == "exact") {
         val cos = Dedup.cosine(col("vi"), col("vj"))

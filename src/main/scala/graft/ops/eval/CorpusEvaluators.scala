@@ -35,16 +35,17 @@ object CorpusEvaluators {
     // stream), the explode runs at the derived width rather than the
     // corpus scan's split count, and the union that defeated
     // partitioning reuse is gone.
-    val width = graft.ops.sim.Similarity.autoEnumPartitions(
-      n.toLong, pairs.sparkSession)
+    val width = graft.core.Partitioning.stageWidth(n.toLong, pairs.sparkSession)
     val parted = pairs.repartition(width, col(idKey))
     // the side tag is POSITIONAL (pos < |pred words| = pred side), not a
     // per-token struct/string: one concat of the two existing token
     // arrays and an int compare per token — a struct-wrapping variant
-    // measured ~2× the per-token CPU at ×10
+    // measured ~2× the per-token CPU at ×10. A null side is an empty
+    // token list: concat with NULL is NULL, which would drop the pair
+    // and shift the corpus-wide dfreq.
     val tagged = parted
-      .select(col(idKey), words(col(predKey)).as("__wp"),
-        words(col(refKey)).as("__wr"))
+      .select(col(idKey), coalesce(words(col(predKey)), array()).as("__wp"),
+        coalesce(words(col(refKey)), array()).as("__wr"))
       .select(col(idKey), size(col("__wp")).as("__np"),
         posexplode(concat(col("__wp"), col("__wr"))).as(Seq("__pos", "tok")))
     val tf = tagged.groupBy(idKey, "tok").agg(
@@ -110,10 +111,9 @@ object CorpusEvaluators {
     //    width instead of the corpus SCAN's split count (sf0.1's single
     //    parquet split ran the whole gram pass on one core: cpu_ratio
     //    1.46, 8→32-core scaling ratio 1.04 — §2.5 input starvation; the
-    //    width is nDocs-derived and clamped exactly like the sim
-    //    family's heals, so a real cluster's wide scan is NOT narrowed
-    //    and AQE's byte-based coalescing cannot starve a CPU-bound
-    //    stage it can't see);
+    //    width is [[graft.core.Partitioning.stageWidth]] of nDocs, so a
+    //    real cluster's wide scan is NOT narrowed and AQE's byte-based
+    //    coalescing cannot starve a CPU-bound stage it can't see);
     //  - HashPartitioning(id) satisfies the groupBy(id, n, gram)
     //    clustering, so the aggregate runs in the SAME exchange — plan
     //    exchange count is unchanged — and `lens` below derives from the
@@ -124,8 +124,7 @@ object CorpusEvaluators {
     // the round-8 formC lesson about gram-skewed repartition(n, gram)
     // partitions stands — the dfreq window below still re-exchanges by
     // (n, gram) exactly as before).
-    val width = graft.ops.sim.Similarity.autoEnumPartitions(
-      nDocs.toLong, pairs.sparkSession)
+    val width = graft.core.Partitioning.stageWidth(nDocs.toLong, pairs.sparkSession)
     val parted = pairs.repartition(width, col(idKey))
     val tf = parted.select(col(idKey),
       graft.functions.hashExpressions.pairNgramTf(
@@ -151,12 +150,11 @@ object CorpusEvaluators {
     // skew-free alternative (dfreq as a partial aggregate merge-joined
     // back, which STREAMS the skewed side) is exactly the pre-r7 shape;
     // round-8's interleaved ×100 A/B re-measured it plus two
-    // single-exchange variants (CiderAB formC/formD: 79.2/78.2 s vs
-    // 61.8 s for this form), so the hazard is documented rather than
-    // traded for a measured 1.27× local regression. If a real-cluster
-    // run ever stalls on a head-gram window task, flip to the formD
-    // join-back shape in CiderAB — it buffers nothing group-sized, and
-    // row-identity at sf0.01 is pinned by `CiderAB --check`.
+    // single-exchange variants (formC/formD: 79.2/78.2 s vs 61.8 s for
+    // this form), so the hazard is documented rather than traded for a
+    // measured 1.27× local regression. If a real-cluster run ever
+    // stalls on a head-gram window task, switch to the formD join-back
+    // shape recorded in BASELINE.md — it buffers nothing group-sized.
     val w = tf
       .withColumn("dfreq", sum(when(col("tf_r") > 0, 1L).otherwise(0L))
         .over(Window.partitionBy("n", "gram")))

@@ -85,21 +85,15 @@ final case class ChunkSplitter(inputKey: String = "text",
     val sentences = df.select(col(idKey),
       posexplode(filter(transform(split(col(inputKey), "[.!?]+"), s => trim(s)),
         s => s =!= "")).as(Seq("__sp", "__sent")))
-    // r18 (guide §2.2/§2.5, measured): when the corpus scan is NARROWER
-    // than the session's shuffle width, the per-sentence embed runs at
-    // the scan's split count (sf0.1's single parquet split: cpu_ratio
-    // 1.51 on 32 cores) because mapPartitions chains on the scan — the
-    // downstream id window re-exchanges anyway, so moving that exchange
-    // BEFORE the embed parallelizes the mock-embed at unchanged
+    // When the corpus scan is narrower than the session, the
+    // per-sentence embed runs at the scan's split count (sf0.1's single
+    // parquet split: cpu_ratio 1.51 on 32 cores) because mapPartitions
+    // chains on the scan. The downstream id window re-exchanges anyway,
+    // so widening by id BEFORE the embed parallelizes it at unchanged
     // exchange count, and the exchange carries raw sentences instead of
-    // sentence+embedding rows. Zero-job gate (lazyScanWidth answers
-    // from planning alone); a cluster-scale wide scan is never
-    // narrowed — its plan is untouched.
-    val shufW = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val parted = graft.ops.sim.Similarity.lazyScanWidth(sentences) match {
-      case Some(w) if w < shufW => sentences.repartition(shufW, col(idKey))
-      case _ => sentences
-    }
+    // sentence+embedding rows. A wide scan's plan is untouched.
+    val parted = graft.core.Partitioning.widenIfStarved(sentences,
+      key = Some(col(idKey)))
     val embedded = graft.serving.LLMMap.embedded(parted, "__sent", "__emb", client)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(idKey).orderBy("__sp")

@@ -2,6 +2,7 @@ package graft.ops.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Partitioning
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -36,14 +37,15 @@ object Similarity {
     * raise it as far as executor memory tolerates the query build. */
   val MaxBroadcastQueries: Long = 100000L
 
-  /** Query-count floor for [[lshTopK]]'s broadcast-path parallelism
-    * heal (r14): below this, probe work per corpus row is light enough
-    * that an extra corpus shuffle costs more than the starvation — the
-    * sf0.1 bench shape (a handful of queries, 1-split corpus) must not
-    * pay a new exchange for nothing. Above it, probe work (qCount x
-    * bucket collisions per corpus row) dwarfs one pre-explode
-    * round-robin pass: measured at x100, 50k queries on a 2-split
-    * corpus ran 546 s un-healed vs 78 s at full width. */
+  /** Query-count floor for the broadcast-probe parallelism heal of
+    * [[lshTopK]] and [[ivfTopK]] (the work gate they pass to
+    * [[Partitioning.widenIfStarved]]): below this, probe work per corpus
+    * row is light enough that an extra corpus shuffle costs more than
+    * the starvation — the sf0.1 bench shape (a handful of queries,
+    * 1-split corpus) must not pay a new exchange for nothing. Above it,
+    * probe work (qCount x bucket collisions per corpus row) dwarfs one
+    * pre-explode round-robin pass: measured at x100, 50k queries on a
+    * 2-split corpus ran 546 s un-healed vs 78 s at full width. */
   val MinHealQueries: Long = 1024L
 
   /** Sequential-fold cosine via the native codegen'd expression — same
@@ -215,10 +217,10 @@ object Similarity {
     // under AQE is itself 2 jobs (stage materialization + final), so
     // every lshTopK call paid 4 scheduling floors at bench scale, and
     // two corpus-side passes where one suffices at any scale. A tagged
-    // ids-only union counted in a single runJob fixes both; when `bits`
+    // ids-only union counted in a single job fixes both; when `bits`
     // is explicit the corpus side isn't scanned at all.
     val qIds = q0.select(lit(1).as("__side"))
-    val (corpusN, qCount) = sideCounts(
+    val (corpusN, qCount) = Partitioning.sideCounts(
       if (bits == 0) corpus.select(lit(0).as("__side")).unionAll(qIds)
       else qIds)
     val b = if (bits == 0) autoBits(corpusN) else bits
@@ -239,22 +241,13 @@ object Similarity {
     // fallback needs no heal (its own exchange re-parallelizes).
     val c0 = corpus.select(col(idKey).as("neighbor_id"),
       col(embKey).cast("array<double>").as("__ce"))
-    // qCount is already known here, so short-circuit BEFORE the gate:
-    // probeHealWidth's width probe is zero jobs but not zero cost (it
-    // builds a full QueryExecution for the corpus projection), and the
-    // small-query bench shape must stay plan-construction-identical to
-    // r14 (the r15 canary measured the dropped short-circuit as +80 ms
-    // on sim_lsh_topk — the only touched-family flag; restored).
-    val cPre = if (broadcastPath && qCount >= MinHealQueries) {
-      probeHealWidth(c0, qCount) match {
-        case Some(w) =>
-          org.slf4j.LoggerFactory.getLogger(getClass).info(
-            s"lshTopK: split-starved corpus under $qCount broadcast " +
-              s"queries — repartitioning to $w (probe-stage heal)")
-          c0.repartition(w)
-        case None => c0
-      }
-    } else c0
+    // qCount is already known here, so short-circuit BEFORE the rule:
+    // its width probe is zero jobs but not zero cost (it builds a full
+    // QueryExecution for the corpus projection), and the r15 canary
+    // measured an unconditional probe as +80 ms on sim_lsh_topk.
+    val cPre =
+      if (broadcastPath && qCount >= MinHealQueries) Partitioning.widenIfStarved(c0)
+      else c0
     val c = cPre
       .withColumn("__ba", CosineLsh.buckets(col("__ce"), b, dim, tables))
       .withColumn("__bucket", explode(col("__ba")))
@@ -321,8 +314,7 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, embKey: String,
       idKey: String, k: Int, nLists: Int = 16, nProbe: Int = 4,
       seed: Long = 42L, maxTrain: Int = 100000,
-      exportDir: Option[String] = None,
-      minHealQueries: Long = MinHealQueries): DataFrame = {
+      exportDir: Option[String] = None): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val c = corpus.select(col(idKey).as("neighbor_id"),
@@ -351,7 +343,7 @@ object Similarity {
       // oneJobCount, not count(): c is an exchange-free projection, and
       // even an oracle-only path shouldn't model 2-job gate counts as
       // acceptable (r13 verdict #5 — the sideCounts treatment, applied)
-      val nRows = oneJobCount(c)
+      val nRows = Partitioning.oneJobCount(c)
       centers.zipWithIndex.toSeq
         .map { case (ct, i) => (i, ct.toSeq, nRows) }
         .toDF("list_id", "center", "sf_rows")
@@ -381,25 +373,14 @@ object Similarity {
     // parallelizes only the aggregation, never the probe work above. A
     // compact single-file corpus probed by a large nProbe-exploded
     // query set starves exactly as lshTopK did pre-heal. The query
-    // count (one job over the ids-only projection — the sideCounts
-    // cost class) is paid only when the scan is actually starved
-    // (by-name in [[probeHealWidth]]). The k-means TRAINING slice and
-    // the centroid export stay on the unhealed `c`: `limit(maxTrain)`
-    // on a repartitioned corpus would pick different training rows,
-    // and centroids must not depend on a parallelism heal.
-    // oneJobCount is shuffle-safe since r16 (ADVICE): a query set with
-    // shuffle lineage falls back to an AQE-managed count instead of
-    // finalizing its exchanges through toRdd.
-    // minHealQueries: the gate floor as a knob (Long.MaxValue disables —
-    // the A/B switch, mirroring lshTopK's maxBroadcastQueries role)
-    val cProbe = probeHealWidth(c, oneJobCount(q), minHealQueries) match {
-      case Some(w) =>
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"ivfTopK: split-starved corpus under a large broadcast query " +
-            s"set — repartitioning to $w (probe-stage parallelism heal)")
-        c.repartition(w)
-      case None => c
-    }
+    // count (one job over the ids-only projection) is paid only when
+    // the scan is actually starved (the rule's by-name work gate). The
+    // k-means TRAINING slice and the centroid export stay on the
+    // unhealed `c`: `limit(maxTrain)` on a repartitioned corpus would
+    // pick different training rows, and centroids must not depend on a
+    // parallelism heal.
+    val cProbe = Partitioning.widenIfStarved(c,
+      work = Partitioning.oneJobCount(q) >= MinHealQueries)
     val assigned = cProbe.withColumn("__list",
       nearestLists(col("__ce"), lit(1))(0))
     val probed = q.withColumn("__list",
@@ -432,200 +413,6 @@ object Similarity {
     math.min(24, math.max(8, needed))
   }
 
-  /** Partition count for [[similarityJoin]]'s enumerate stage (r12).
-    * The stage's task time is Σ C(bucket, 2) over the buckets a
-    * partition holds — quadratic per near-dup cluster — while its
-    * SHUFFLE BYTES are linear, so byte-driven machinery (AQE coalesce,
-    * AQE skew split at 5×-median/256 MB) mis-sizes it in both
-    * directions; the r11 ×1000 run measured the result: 23/32 tasks
-    * done at hour 7, a 9-task tail of ~60-cluster bundles (~325 CPU-s
-    * per cluster) pinning the stage to 9 cores for hours. Target ~512
-    * exploded source rows per partition — at autoBits occupancy that is
-    * a handful of buckets, so the tail is set by the largest single
-    * bucket, not by bundling variance — clamped to
-    * [spark.sql.shuffle.partitions, 8 × defaultParallelism] (floor:
-    * never plan COARSER than the session default; cap: bounded task
-    * count on small clusters while still 8× the slot count at any
-    * scale). local[32] examples: sf0.1 (2k vectors) → 32, unchanged;
-    * ×100 (200k) → 256; ×1000 (2M) → 256 (capped), a ~9× shorter tail
-    * than the measured 32-partition run. */
-  private[graft] def autoEnumPartitions(n: Long,
-      spark: org.apache.spark.sql.SparkSession): Int = {
-    val base = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val cap = math.max(base, 8 * spark.sparkContext.defaultParallelism)
-    // clamp in Long BEFORE narrowing: (n / 512L).toInt overflows negative
-    // past n ≈ 1.1e12, and max(base, negative) would silently return the
-    // session base — the opposite of the intended scaling direction
-    math.min(cap.toLong, math.max(base.toLong, n / 512L)).toInt
-  }
-
-  /** The broadcast-probe parallelism-heal gate shared by [[lshTopK]] and
-    * [[ivfTopK]]: Some(width) = round-robin the corpus to `width` before
-    * the broadcast-probe join (its probe stage otherwise runs at the
-    * corpus SCAN's split count — the r14 7×, 546→78 s at ×100); None =
-    * leave the plan alone. Two deliberate refusals:
-    *   - `qCount` is BY-NAME: a gate count job (or any other cost the
-    *     caller's expression carries) is paid ONLY when the scan is
-    *     actually starved — the common big-cluster path (thousands of
-    *     splits) answers from pure planning, zero jobs.
-    *   - shuffle-lineage corpora are never healed ([[lazyScanWidth]] =
-    *     None): probing their width would EXECUTE their exchanges under
-    *     AQE (r14 advice). Documented boundary: a shuffle usually lands
-    *     at the session's shuffle width, but AQE may coalesce a compact
-    *     post-shuffle corpus back to few partitions; that residual
-    *     starvation is accepted rather than a double-execution gate —
-    *     a caller feeding a compact shuffle-derived corpus to a large
-    *     query set should materialize or repartition it explicitly. */
-  private[graft] def probeHealWidth(c: DataFrame, qCount: => Long,
-      minQueries: Long = MinHealQueries): Option[Int] = {
-    val floor = c.sparkSession.sparkContext.defaultParallelism
-    lazyScanWidth(c) match {
-      case Some(w) if w < floor && qCount >= minQueries => Some(floor)
-      case _ => None
-    }
-  }
-
-  /** True iff `plan` is non-adaptive and exchange-free — the
-    * precondition for driving its RDD directly ([[lazyScanWidth]],
-    * [[oneJobCount]], [[sideCounts]]): `toRdd` on a plan AQE wrapped in
-    * `AdaptiveSparkPlanExec` finalizes the adaptive plan, which
-    * MATERIALIZES every exchange in the lineage (real shuffle jobs, not
-    * reusable by the later full query), and even without AQE a direct
-    * runJob over an exchange plan forfeits runtime re-planning. */
-  private def exchangeFree(plan: org.apache.spark.sql.execution.SparkPlan): Boolean = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
-    !plan.exists {
-      case _: AdaptiveSparkPlanExec => true
-      case _: Exchange => true
-      case _ => false
-    }
-  }
-
-  /** Scan width (RDD partition count) of an exchange-free plan WITHOUT
-    * executing anything; `None` when the plan has shuffle lineage.
-    *
-    * Why the guard (r15, ADVICE): `Dataset.rdd`/`toRdd` on a plan AQE
-    * wrapped in `AdaptiveSparkPlanExec` finalizes the adaptive plan,
-    * which MATERIALIZES every exchange in the lineage — real shuffle
-    * jobs, not reusable by the later full query — just to read a
-    * partition count. AQE only wraps plans containing exchanges or
-    * subqueries, so a non-adaptive executed plan is narrow over its
-    * scan and building its RDD graph is pure planning (zero jobs); for
-    * those, and only those, the width is read directly. (With AQE
-    * disabled an exchange plan's RDD is also lazy, but then its width
-    * is the static shuffle partition count — never scan-starved — so
-    * returning None for it too costs nothing.)
-    *
-    * Cache boundary (r16, ADVICE): a CACHED corpus surfaces as
-    * `InMemoryTableScanExec`, and (Spark 4.1) AQE wraps ANY plan over a
-    * cache scan, so such a corpus used to be refused wholesale. Probing
-    * an UNMATERIALIZED cache would execute the cache build (the cached
-    * plan's own AQE shell + exchanges — real jobs), so it answers None
-    * (the same accepted residual as shuffle lineage: materialize or
-    * repartition explicitly). A MATERIALIZED cache answers its width
-    * from the existing cached RDD — pure metadata, zero jobs — which
-    * the r15 guard's blanket AQE refusal left on the table. The AQE
-    * shell is unwrapped for INSPECTION only (via `inputPlan`, never
-    * finalized); any exchange, unbuilt cache, or other AQE trigger
-    * (e.g. a subquery) under the shell still refuses.
-    *
-    * Width-changing narrow nodes (r16 ADVICE, closed r17): the cached
-    * RDD's partition count answers for the ROOT's width only while
-    * every node between the cache scan and the root preserves
-    * partition count — `coalesce` (CoalesceExec) and `union`
-    * (UnionExec) don't, and a cartesian product multiplies widths, so
-    * a 32-partition cache coalesced to 1 used to report 32 and skip a
-    * needed heal (perf-only, results stayed correct). Those nodes are
-    * now hazards in the AQE branch; the metadata answer is taken only
-    * when the cache scan is the sole partitioning-relevant node.
-    * R17Spec pins coalesce and union over a built cache → None. */
-  private[graft] def lazyScanWidth(df: DataFrame): Option[Int] = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.{CoalesceExec, UnionExec}
-    import org.apache.spark.sql.execution.joins.CartesianProductExec
-    def unbuilt(s: InMemoryTableScanExec): Boolean =
-      !s.relation.cacheBuilder.isCachedColumnBuffersLoaded
-    df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec =>
-        // driving toRdd would finalize the adaptive plan; the one shape
-        // still answerable with zero jobs is a BUILT cache scan under
-        // narrow WIDTH-PRESERVING operators (width = the cached RDD's
-        // partition count)
-        val in = a.inputPlan
-        val hazard = in.exists {
-          case _: Exchange => true
-          case _: AdaptiveSparkPlanExec => true
-          case s: InMemoryTableScanExec => unbuilt(s)
-          case _: CoalesceExec => true
-          case _: UnionExec => true
-          case _: CartesianProductExec => true
-          case _ => false
-        }
-        if (hazard) None
-        else in.collectFirst { case s: InMemoryTableScanExec =>
-          s.relation.cacheBuilder.cachedColumnBuffers.getNumPartitions
-        } // no cache ⇒ AQE wrapped for another reason (subquery) ⇒ None
-      case p =>
-        val hazard = p.exists {
-          case _: Exchange => true
-          case s: InMemoryTableScanExec => unbuilt(s)
-          case _ => false
-        }
-        if (hazard) None else Some(df.queryExecution.toRdd.getNumPartitions)
-    }
-  }
-
-  /** Row count in exactly ONE Spark job when the plan allows it — the
-    * single-side sibling of [[sideCounts]] (same reasoning: a DataFrame
-    * `count()` is 2+ jobs under AQE, each a ~55 ms scheduling floor).
-    * The fast path drives `toRdd` directly, which is only legal on an
-    * exchange-free plan (r16, ADVICE: on a shuffle-lineage input —
-    * e.g. ivfTopK gating a query set built by a groupBy — `toRdd`
-    * would finalize the plan's exchanges under AQE as non-reusable
-    * shuffle jobs, the exact hazard class [[lazyScanWidth]] guards on
-    * the corpus side), so a shuffled input falls back to a plain
-    * AQE-managed `count()` — 2+ jobs, the documented cost of gating a
-    * shuffle-derived input, but never a contract violation. */
-  private[graft] def oneJobCount(df: DataFrame): Long = {
-    val narrow = df.select(lit(1))
-    if (!exchangeFree(narrow.queryExecution.executedPlan)) narrow.count()
-    else narrow.sparkSession.sparkContext
-      .runJob(narrow.queryExecution.toRdd,
-        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-          var c = 0L; while (it.hasNext) { it.next(); c += 1L }; c
-        })
-      .sum
-  }
-
-  /** Per-side row counts of a tagged ids-only plan (`__side` int column,
-    * 0 = corpus, 1 = queries) in exactly ONE Spark job. A DataFrame
-    * `count()` runs 2+ jobs under AQE (shuffle-stage materialization,
-    * then the final stage) — each job is a ~55 ms scheduling floor in
-    * local mode, which is the measurable cost of an auto-knob gate at
-    * bench scale. The plan here is a narrow projection (no exchange),
-    * so driving its RDD directly with one `runJob` is one pass, one
-    * job, no AQE staging. When a CALLER's input carries shuffle lineage
-    * (the r16 oneJobCount hazard — `toRdd` would finalize its exchanges
-    * under AQE), fall back to one AQE-managed aggregation instead. */
-  private def sideCounts(tagged: DataFrame): (Long, Long) = {
-    if (!exchangeFree(tagged.queryExecution.executedPlan)) {
-      val m = tagged.groupBy(col("__side")).count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      return (m.getOrElse(0, 0L), m.getOrElse(1, 0L))
-    }
-    val rdd = tagged.queryExecution.toRdd
-    tagged.sparkSession.sparkContext
-      .runJob(rdd, (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        var c0 = 0L; var c1 = 0L
-        it.foreach(r => if (r.getInt(0) == 0) c0 += 1 else c1 += 1)
-        (c0, c1)
-      })
-      .foldLeft((0L, 0L)) { case ((a0, a1), (b0, b1)) => (a0 + b0, a1 + b1) }
-  }
-
   /** Cosine-similarity join: all pairs (a, b) with cos ≥ threshold, via
     * multi-table LSH buckets (candidates only, then exact check).
     * `bits = 0` (the DEFAULT — fixed widths are the measured scale trap:
@@ -636,26 +423,6 @@ object Similarity {
     * honored as given, including > 24, up to 63 (the Long code width —
     * wider would silently wrap the shift and COARSEN buckets, so it is
     * rejected at the boundary).
-    *
-    * `center = true` subtracts the corpus mean before the sign-bit dot
-    * products (equivalently: per-plane offsets dot(μ, w_p), computed once
-    * from one cheap agg). Random-hyperplane codes assume roughly
-    * zero-centered data; an all-positive embedding corpus puts most mass
-    * on the same side of many planes, so codes skew into a few hot
-    * buckets and wider keys split them slowly — the round-9 A/B measured
-    * only 1.22× from bits 8→11 on such a corpus for exactly this reason.
-    * Centering is a RUNTIME knob (default off): bucket assignment changes,
-    * so runs pinned to a SQL oracle's uncentered codes must not set it;
-    * the exact cosine verify is unchanged either way, so the PAIR SET at
-    * a given threshold only gains/loses via candidate recall. MEASURED
-    * (r15, RecallSpec, 600-row corpus biased around the all-ones
-    * direction, pairs planted at cos 0.95, bits=8/tables=4): centering
-    * splits the hottest bucket 205 → 14 rows but recall falls 0.873 →
-    * 0.550 — the shared mean carries most of a biased pair's cosine, so
-    * the residuals meet at a much wider angle and per-plane collision
-    * drops well below the zero-centered theory. Centering SPENDS recall
-    * to buy bucket balance; callers who set it should raise `tables`
-    * to buy the recall back.
     *
     * Emit-once: each side carries its full bucket-key array (tables ×
     * ~12 B — noise next to the vector) and a pair survives only in its
@@ -671,40 +438,18 @@ object Similarity {
     * straight from the join. */
   def similarityJoin(df: DataFrame, embKey: String, idKey: String,
       threshold: Double, bits: Int = 0, dim: Int = 64,
-      tables: Int = 4, center: Boolean = false,
-      enumPartitions: Int = 0): DataFrame = {
+      tables: Int = 4): DataFrame = {
     require(bits >= 0 && bits <= 63,
       s"bits must be in [0, 63] (Long bucket-code width), got $bits")
-    // one cheap ids-only count feeds both auto knobs (key width, and the
-    // enumerate-stage partition count below) — via the single-job
-    // [[sideCounts]] pass (a DataFrame count() is 2 jobs under AQE)
-    lazy val corpusN = sideCounts(df.select(lit(0).as("__side")))._1
+    // one cheap single-job count feeds both auto knobs: the key width
+    // and the enumerate-stage width below
+    val corpusN = Partitioning.oneJobCount(df)
     // bits = 0 → auto: sizes the key width so bucket occupancy stays
     // ~constant as the corpus grows
     val b = if (bits == 0) autoBits(corpusN) else bits
-    // enumPartitions: > 0 = exact width; 0 (default) = auto from the
-    // corpus count (the same ids-only count autoBits uses — note this
-    // means explicit-bits callers also pay one count job; a caller
-    // whose input lineage is expensive and uncached can pass -1);
-    // -1 = inherit the session's join planning (no repartition, no
-    // count — the pre-r12 plan shape).
-    // NB: an explicit width BELOW the session's shuffle partitions is
-    // raised to it by Spark's distribution requirements (observed: 5 →
-    // session 8 in the planned exchanges; 13 stays 13). The auto path
-    // floors at the session value by construction, so only deliberate
-    // sub-base explicit values meet this — and coarser-than-base was
-    // never a sensible request for an enumerate stage.
-    require(enumPartitions >= -1,
-      s"enumPartitions must be -1 (inherit), 0 (auto) or positive, got $enumPartitions")
-    val enumParts: Option[Int] =
-      if (enumPartitions > 0) Some(enumPartitions)
-      else if (enumPartitions == 0) Some(autoEnumPartitions(corpusN, df.sparkSession))
-      else None
-    val offsets =
-      if (center) CosineLsh.centerOffsets(df, embKey, b, dim, tables)
-      else Array.empty[Double]
+    val width = Partitioning.stageWidth(corpusN, df.sparkSession)
     val v = df.select(col(idKey), col(embKey).cast("array<double>").as("__v"))
-      .withColumn("__bkts", CosineLsh.buckets(col("__v"), b, dim, tables, offsets))
+      .withColumn("__bkts", CosineLsh.buckets(col("__v"), b, dim, tables))
       .withColumn("__bucket", explode(col("__bkts")))
     val l = v.select(col(idKey).as("a"), col("__v").as("va"),
       col("__bkts").as("__ba"), col("__bucket"))
@@ -723,23 +468,16 @@ object Similarity {
     // catch them.
     // merge hint: both sides are corpus-sized and carry the vector — a
     // small static size estimate must never pick a corpus broadcast.
-    // Explicit fine repartition by bucket key (r12): the enumerate
-    // stage's work is QUADRATIC per bucket while its shuffle bytes are
-    // linear, so AQE can neither skew-split it (partition bytes sit far
-    // under the 256 MB threshold — the ×1000 run's stage held 2.3 GB
-    // across 32 partitions) nor be allowed to coalesce it (it would
-    // re-bundle by bytes). Measured at ×1000 (2 M vectors, ~2000
-    // near-dup clusters, 32 partitions): 23/32 tasks done at hour 7,
-    // then a 9-task straggler tail — each task a ~60-cluster bundle at
-    // ~325 CPU-s per cluster — pinning the stage to single-digit cores
-    // for hours. Finer bucket partitioning shrinks the tail to
-    // O(clusters-per-partition); both sides share one exchange
-    // (identical subtrees → ReusedExchange), so partition count is the
-    // only plan change. Pinning the count does opt this join out of
-    // AQE's skew reader, which never fired here anyway.
-    val lp = enumParts.map(n => l.repartition(n, col("__bucket"))).getOrElse(l)
-    val rp = enumParts.map(n => r.repartition(n, col("__bucket"))).getOrElse(r)
-    lp.join(rp.hint("merge"), Seq("__bucket")).where(col("a") < col("b"))
+    // Explicit fine repartition by bucket key at the stage width
+    // ([[Partitioning.stageWidth]]): the enumerate stage's work is
+    // QUADRATIC per bucket while its shuffle bytes are linear, so AQE
+    // can neither skew-split it nor be allowed to coalesce it by bytes.
+    // Both sides share one exchange (identical subtrees →
+    // ReusedExchange); pinning the count opts this join out of AQE's
+    // skew reader, which never fired here anyway.
+    l.repartition(width, col("__bucket"))
+      .join(r.repartition(width, col("__bucket")).hint("merge"), Seq("__bucket"))
+      .where(col("a") < col("b"))
       .where(element_at(
         filter(col("__ba"), x => array_contains(col("__bb"), x)), 1)
         === col("__bucket"))
@@ -758,32 +496,4 @@ object CosineLsh {
     * ([[graft.functions.kernels]]). */
   def buckets(v: Column, bits: Int, dim: Int, tables: Int): Column =
     graft.functions.hashExpressions.lshBuckets(v, bits, dim, tables)
-
-  /** Centered variant: plane p's sign test becomes dot(v, w_p) >
-    * offsets(p). Empty offsets = the uncentered form above. */
-  def buckets(v: Column, bits: Int, dim: Int, tables: Int,
-      offsets: Array[Double]): Column =
-    graft.functions.hashExpressions.lshBuckets(v, bits, dim, tables, offsets)
-
-  /** Per-plane centering offsets from the corpus mean: since the plane
-    * weights are fixed, dot(v - μ, w_p) > 0 ⟺ dot(v, w_p) > dot(μ, w_p),
-    * so centering is tables×bits precomputed scalars — no second
-    * per-row vector materialization, and the hot kernel only swaps the
-    * comparison constant. One narrow agg pass computes μ (element_at past
-    * a short vector's end is null and avg ignores nulls — consistent
-    * with the kernel's min(length) dot loop). */
-  def centerOffsets(df: DataFrame, embKey: String, bits: Int, dim: Int,
-      tables: Int): Array[Double] = {
-    val vcol = col(embKey).cast("array<double>")
-    val aggs = (0 until dim).map(i => avg(element_at(vcol, i + 1)))
-    val row = df.agg(aggs.head, aggs.tail: _*).first()
-    val mean = Array.tabulate(dim)(i =>
-      if (row.isNullAt(i)) 0.0 else row.getDouble(i))
-    val w = graft.functions.kernels.planes(bits, dim, tables)
-    Array.tabulate(tables * bits) { p =>
-      var s = 0.0; var i = 0
-      while (i < dim) { s += mean(i) * w(p)(i); i += 1 }
-      s
-    }
-  }
 }

@@ -8,11 +8,15 @@ import graft.serving.{LLMMap, ServingClient}
 /** Text2SQL suite — SURVEY §2.10. */
 
 /** Extract the first ```sql fenced block (fallback: whole string) —
-  * the parse step of `text2sql/generate/sql_generator.py:56-67`. */
+  * the parse step of `text2sql/generate/sql_generator.py:56-67`. Leading
+  * and trailing whitespace of every kind is stripped, as Python's
+  * `.strip()` does there; Spark's `trim` strips only spaces and would
+  * keep the newline before a closing fence. */
 object SqlExtract {
   def apply(c: Column): Column = {
+    def strip(x: Column) = regexp_replace(x, "(?U)^\\s+|\\s+$", "")
     val block = regexp_extract(c, "(?s)```sql\\s*(.*?)```", 1)
-    when(block =!= "", trim(block)).otherwise(trim(c))
+    when(block =!= "", strip(block)).otherwise(strip(c))
   }
 }
 

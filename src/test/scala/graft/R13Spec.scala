@@ -13,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    scheduling floor on every call at bench scale. The knobs stay
   *    (they are the 100 TB OOM guards); the pin is that they ride ONE
   *    job. Same contract for similarityJoin's auto path (r12 verdict
-  *    #5): bits=0 + enumPartitions=0 must run exactly one ids-only
-  *    count job feeding both knobs.
+  *    #5): bits=0 must run exactly one ids-only count job feeding both
+  *    knobs (key width and enumerate-stage width).
   */
 class R13Spec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -77,16 +77,6 @@ class R13Spec extends AnyFunSuite {
       Similarity.similarityJoin(emb, "embedding", "vec_id", 0.4)
     }
     assert(n == 1, s"expected exactly 1 ids-only count job, saw $n")
-  }
-
-  test("similarityJoin enumPartitions=-1 runs no job at plan time") {
-    import graft.ops.sim.Similarity
-    emb.schema
-    val n = jobsDuring("r13-simjoin-inherit") {
-      Similarity.similarityJoin(emb, "embedding", "vec_id", 0.4,
-        bits = 8, enumPartitions = -1)
-    }
-    assert(n == 0, s"the documented no-count escape hatch ran $n job(s)")
   }
 
   // ── artifact JSON must be locale-proof (r12 advice) ──

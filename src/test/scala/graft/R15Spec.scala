@@ -13,13 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    pre-heal. Pins mirror R14Spec's lshTopK pair: the heal fires
   *    (round-robin under a retained broadcast join) and is row-identical
   *    to the unhealed shape; a small query set never pays it.
-  * 2. `lazyScanWidth` (r14 advice, medium): the heal gates must read the
-  *    corpus scan width WITHOUT executing the corpus lineage —
-  *    `Dataset.rdd` on an AQE-wrapped plan materializes every exchange
-  *    just to read a partition count. Pins: zero jobs for both the
-  *    narrow and the shuffle-lineage answer, None for shuffle lineage,
-  *    and a shuffle-lineage corpus flows through lshTopK's gate with
-  *    exactly the one sideCounts job — no eager double-execution.
+  * 2. The heal gate reads the corpus width WITHOUT executing the corpus
+  *    lineage (r14 advice, medium): a shuffle-lineage corpus flows
+  *    through lshTopK's gate with exactly the one sideCounts job — no
+  *    eager double-execution.
   */
 class R15Spec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -47,32 +44,6 @@ class R15Spec extends AnyFunSuite {
     val dims = (1 to 64).map(d => sin((col("id") + 1) * d))
     spark.range(n).select(col("id").as("vec_id"),
       array(dims: _*).as("embedding"))
-  }
-
-  // ── lazyScanWidth: the zero-execution gate probe ──
-
-  test("lazyScanWidth reads a narrow plan's width with zero jobs") {
-    import graft.ops.sim.Similarity
-    val narrow = vecs(100).coalesce(1)
-    var got: Option[Int] = None
-    val n = jobsDuring("r15-lazy-width-narrow") {
-      got = Similarity.lazyScanWidth(narrow)
-    }
-    assert(got.contains(1), s"expected Some(1) for a coalesced scan, got $got")
-    assert(n == 0, s"width probe of a narrow plan ran $n job(s)")
-  }
-
-  test("lazyScanWidth refuses a shuffle-lineage plan with zero jobs") {
-    import graft.ops.sim.Similarity
-    // hash repartition → Exchange → AQE wraps the plan; probing its RDD
-    // would materialize the shuffle (the r14-advice hazard)
-    val shuffled = vecs(100).repartition(2, col("vec_id"))
-    var got: Option[Int] = Some(-1)
-    val n = jobsDuring("r15-lazy-width-shuffle") {
-      got = Similarity.lazyScanWidth(shuffled)
-    }
-    assert(got.isEmpty, s"expected None for shuffle lineage, got $got")
-    assert(n == 0, s"the WHOLE POINT is zero jobs; saw $n")
   }
 
   test("lshTopK gate runs exactly one job for a shuffle-lineage corpus") {
@@ -135,25 +106,4 @@ class R15Spec extends AnyFunSuite {
     assert(res.count() == 10 * 3)
   }
 
-  test("probeHealWidth: width-first gate order — qCount paid only when starved") {
-    import graft.ops.sim.Similarity
-    val sc = spark.sparkContext
-    val floor = sc.defaultParallelism
-    // wide corpus: the by-name qCount must NEVER be evaluated (the
-    // common big-cluster path pays zero gate jobs) — a throwing thunk
-    // is the strongest possible pin on that ordering
-    val wide = vecs(400).coalesce(floor)
-    assert(Similarity.probeHealWidth(wide,
-      sys.error("qCount evaluated on a wide corpus")).isEmpty)
-    // shuffle-lineage corpus: same refusal, same zero-evaluation pin
-    val shuffled = vecs(400).repartition(2, col("vec_id"))
-    assert(Similarity.probeHealWidth(shuffled,
-      sys.error("qCount evaluated on shuffle lineage")).isEmpty)
-    // starved corpus: qCount IS consulted; fires at/above the floor only
-    val starved = vecs(400).coalesce(1)
-    assert(Similarity.probeHealWidth(starved, Similarity.MinHealQueries)
-      .contains(floor))
-    assert(Similarity.probeHealWidth(starved,
-      Similarity.MinHealQueries - 1).isEmpty)
-  }
 }

@@ -15,7 +15,8 @@ import graft.ops.dedup.MinHashDeduplicateFilter
   *    PRESERVED — a pair of later members that would match under
   *    all-pairs semantics must NOT drop (the documented recall cap),
   *    even when the bucket overflows mid-stream.
-  * 3. Equal-orderKey rows never pair (the join's strict i < j).
+  * 3. Equal-orderKey rows never pair (the join's strict i < j), in
+  *    small buckets and in a big bucket's streamed tail alike.
   * 4. The walk's emissions stay ids-only and bucket-local: several
   *    buckets hashed into one partition don't leak witnesses across
   *    bucket boundaries.
@@ -89,6 +90,17 @@ class R18Spec extends AnyFunSuite {
     // but a later distinct id still drops against either equal-key row
     val rows2 = Seq((1L, a, 2L), (1L, a, 2L), (2L, a, 2L))
     assert(walk(banded(rows2)) == Set(2L))
+  }
+
+  test("witness walk: big-bucket stream never pairs a row with an equal-key pool") {
+    // cap 2, four rows sharing the minimum doc_id: the bucket overflows
+    // with an all-min pool, and the 4th row streams against it. Equal
+    // keys never pair (the join's strict i < j), so nothing drops.
+    val a = sh(0, 100)
+    val rows = Seq.fill(4)((1L, a, 3L))
+    assert(walk(banded(rows), cap = 2) == Set.empty[Long])
+    // a later distinct key still drops against the min pool
+    assert(walk(banded(rows :+ ((2L, a, 3L))), cap = 2) == Set(2L))
   }
 
   test("witness walk: buckets are independent across and within partitions") {

@@ -123,71 +123,4 @@ class RecallSpec extends AnyFunSuite {
     assert(r4 >= 0.60 && r4 <= 0.98, s"recall@10 $r4 outside [0.60, 0.98] at nProbe=4")
   }
 
-  test("similarityJoin centering: recall AND occupancy measured on a biased corpus (r15)") {
-    // The `center` knob's bucket-skew rationale was measured in r9/r11
-    // (hot buckets split 1.22x slowly with wider keys on an all-positive
-    // corpus); its RECALL effect was only reasoned until now. This
-    // measures both sides on the shape the knob exists for: unit
-    // vectors concentrated around the all-ones direction (the
-    // post-ReLU / sentence-encoder embedding shape), planted pairs at
-    // cosine exactly 0.95, fixed bits = 8 / tables = 4.
-    val nPairs = 300
-    val dim = 64
-    val rnd = new scala.util.Random(7L)
-    def biased(): Array[Double] = {
-      // mean 2/sqrt(dim) per component vs gaussian sd 1: strongly
-      // positive corpus, cosines between unrelated rows ~0.8 — codes
-      // collapse into a few hot buckets when uncentered
-      val v = Array.fill(dim)(2.0 + rnd.nextGaussian())
-      val n = math.sqrt(v.map(x => x * x).sum)
-      v.map(_ / n)
-    }
-    val bases = Array.fill(nPairs)(biased())
-    val rows = bases.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) } ++
-      bases.zipWithIndex.map { case (v, i) =>
-        ((i + nPairs).toLong, partnerAt(v, 0.95, seed = 7000L + i).toSeq)
-      }
-    val df = rows.toSeq.toDF("id", "emb")
-    def measure(center: Boolean): (Double, Long) = {
-      // threshold a hair under the planted cosine (same reasoning as
-      // the uncentered recall test above); biased corpora DO have
-      // accidental >= 0.95 pairs, so recall counts planted pairs only
-      val found = graft.ops.sim.Similarity
-        .similarityJoin(df, "emb", "id", threshold = 0.9499,
-          bits = 8, dim = dim, tables = 4, center = center)
-        .select("a", "b").as[(Long, Long)].collect()
-        .count { case (a, b) => math.abs(a - b) == nPairs }
-      // the cost side of the same knob: the largest single bucket under
-      // the same planes — candidate work per bucket is C(occupancy, 2)
-      val offsets =
-        if (center)
-          graft.ops.sim.CosineLsh.centerOffsets(df, "emb", 8, dim, 4)
-        else Array.empty[Double]
-      val maxBucket = df
-        .select(explode(graft.ops.sim.CosineLsh.buckets(
-          col("emb").cast("array<double>"), 8, dim, 4, offsets)).as("b"))
-        .groupBy("b").count().agg(max("count")).as[Long].head()
-      (found.toDouble / nPairs, maxBucket)
-    }
-    val (rOff, occOff) = measure(center = false)
-    val (rOn, occOn) = measure(center = true)
-    info(f"centered:   recall $rOn%.3f  max-bucket $occOn (600 rows x 4 tables)")
-    info(f"uncentered: recall $rOff%.3f  max-bucket $occOff")
-    // Measured (recorded in COVERAGE.md): uncentered 0.873 recall with
-    // a 205-row hottest bucket (a third of the corpus in ONE bucket —
-    // candidate work quadratic in corpus size, the scale trap);
-    // centered 0.550 recall with a 14-row hottest bucket. The recall
-    // drop is LARGER than the zero-centered theory (~0.89) because the
-    // shared mean component carries most of a biased pair's cosine:
-    // the residuals (v − μ) of a 0.95-cosine pair meet at a much wider
-    // angle, so per-plane collision falls well below 1 − θ/π of the
-    // ORIGINAL angle. Centering is therefore a throughput knob that
-    // SPENDS recall on biased corpora — callers who center should
-    // raise `tables` to buy it back (OR-amplification acts on the
-    // centered collision rate). Bands allow re-measurement drift only.
-    assert(rOff >= 0.78 && rOff <= 1.0, s"uncentered recall $rOff outside [0.78, 1.0]")
-    assert(rOn >= 0.40 && rOn <= 0.72, s"centered recall $rOn outside [0.40, 0.72]")
-    assert(occOn * 4 <= occOff,
-      s"centering must split the hottest bucket at least 4x: $occOn vs $occOff")
-  }
 }
